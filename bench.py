@@ -120,7 +120,7 @@ def main() -> None:
     # number is steady-state daemon throughput, so the comparable
     # figure excludes the one-time JVM/JIT warm-up (all walls in
     # tools/relay_bench.py output; steady-state A/B in SCALE.md §1).
-    relay = None
+    relay = relay_error = None
     try:
         import shutil
 
@@ -138,8 +138,8 @@ def main() -> None:
         assert spark.read.text(OUT_DIR).count() == n
         shutil.rmtree(OUT_DIR, ignore_errors=True)
         relay = round(n / best)
-    except Exception:
-        pass   # relay is supplementary; never fail the bench line
+    except Exception as e:  # noqa: BLE001 — supplementary; never fail the bench line
+        relay_error = f"{type(e).__name__}: {e}"[:300]
 
     total = round(sum(timings.values()), 3)
     print(json.dumps({
@@ -149,6 +149,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "relay_msgs_per_sec": relay,
+        "relay_error": relay_error,
         "relay_baseline": ">1M msgs/sec (reference README.md:8); "
                           "tools/relay_bench.py for the 10M-line run",
     }))

@@ -1350,8 +1350,8 @@ def _var_col(name: str, df: DataFrame | None = None) -> Column:
         # mmpstrucdata-container-null.sh filters on a jsonRoot
         # subtree: '$!structured-data != ""')
         if any(c.startswith(flat + "_") for c in cols):
-            from rsyslog_spark.templates import _all_json_col
-            merged = rf.tree_get(_all_json_col(df), name)
+            from rsyslog_spark.templates import _all_json_col, _tree_read
+            merged = _tree_read(_all_json_col(df), name)
             return F.coalesce(merged, rf.tree_get("json", name)) \
                 if has_json else merged
         if has_json:
@@ -1385,9 +1385,8 @@ def _var_col(name: str, df: DataFrame | None = None) -> Column:
         # $!-side branch (golden rscript_unflatten_conflict2.sh
         # 'set $!a.b = $.x')
         if any(c.startswith(flat + "_") for c in df.columns):
-            from rsyslog_spark.templates import _local_tree_json
-            return rf.tree_get(_local_tree_json(df),
-                               "$!" + name[2:])
+            from rsyslog_spark.templates import _local_tree_json, _tree_read
+            return _tree_read(_local_tree_json(df), "$!" + name[2:])
         return F.lit(None).cast("string")
     return qcol(flat)
 

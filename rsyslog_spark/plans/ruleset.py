@@ -452,7 +452,7 @@ class _Compiler:
                     v = (F.when(_isobj(pv) & _isobj(nv), merged)
                          .when(_isobj(pv) & ~_isobj(nv), pv)
                          .otherwise(v))
-                self.df = self.df.withColumn(name, F.when(live, v).otherwise(prev))
+                val = F.when(live, v).otherwise(prev)
                 if s.name.startswith(("$!", "$.")) \
                         and s.name not in ("$!", "$."):
                     # record the deep path (case-folded, so renders
@@ -463,16 +463,17 @@ class _Compiler:
                     # _local_tree_json)
                     meta = {"rs_path": fold_var(s.name)}
                     if s.maybe_json and \
-                            self.df.schema[name].dataType.typeName() \
-                            == "string":
+                            self.df.select(val).schema[0].dataType \
+                            .typeName() == "string":
                         # RHS was a tree-var read: the string may be
                         # a JSON subtree — renderers splice it raw
                         # when it parses (msg.c msgAddJSON node copy)
                         meta["rs_json_maybe"] = True
-                    # not withMetadata: it parses dotted names
+                    # attached in the same projection; not
+                    # withMetadata: it parses dotted names
                     # ('cee_a.b.c') as nested-field paths
-                    self.df = self.df.withColumn(
-                        name, qcol(name).alias(name, metadata=meta))
+                    val = val.alias(name, metadata=meta)
+                self.df = self.df.withColumn(name, val)
                 if s.name.startswith("$/"):
                     # persist for later runs/batches (plan-time store)
                     GLOBAL_VARS[name] = s.value

@@ -238,7 +238,8 @@ def prop_col(name: str, df=None) -> Column:
         if compact_json_string():
             return raw
         from rsyslog_spark.functions.json_fns import jsonc_spaced
-        return F.when(raw.isNull() | raw.isin("", "{}"), raw)             .otherwise(jsonc_spaced(raw))
+        return _let(raw, lambda r: F.when(r.isNull() | r.isin("", "{}"), r)
+                    .otherwise(jsonc_spaced(r)))
     if name in ("$.", "."):
         # bare local-var root: the $. tree as JSON (golden
         # rscript_bare_var_root.sh 'set $! = $.')
@@ -251,7 +252,10 @@ def prop_col(name: str, df=None) -> Column:
         # object/array-valued reads re-render json-c SPACED (the
         # reference's node→string conversion; goldens
         # mmpstrucdata-escaping.sh, json_array_subscripting.sh)
-        rvv = json_fns.render_var_value
+        # render_var_value reads its input four times: bind it (a
+        # bare column read needs no binding)
+        def rvv(c):
+            return _let(c, json_fns.render_var_value)
         path = fold_var("$!" + name.lstrip("$").lstrip("!"))
         tree = json_fns.tree_get("json", path)
         if df is None:
@@ -261,7 +265,8 @@ def prop_col(name: str, df=None) -> Column:
         has_json = "json" in cols
         if flat in cols:
             c = _container_to_json(df, flat)
-            return rvv(F.coalesce(c, tree) if has_json else c)
+            return rvv(F.coalesce(c, tree)) if has_json \
+                else json_fns.render_var_value(c)
         sub = flat_json_prefix_read(path, df)
         if sub is not None:
             return rvv(F.coalesce(sub, tree) if has_json else sub)
@@ -269,7 +274,7 @@ def prop_col(name: str, df=None) -> Column:
         # from the merged $! tree (set $!str!var1 = ... then
         # %$!str% — golden rscript_b64_decode.sh renders the branch)
         if any(c.startswith(flat + "_") for c in cols):
-            merged = json_fns.tree_get(_all_json_col(df), path)
+            merged = _tree_read(_all_json_col(df), path)
             return rvv(F.coalesce(merged, tree)
                        if has_json else merged)
         return rvv(tree) if has_json else F.lit(None).cast("string")
@@ -283,11 +288,11 @@ def prop_col(name: str, df=None) -> Column:
                 _local_prefix_read)
             sub = _local_prefix_read(lname, df)
             if sub is not None:
-                return render_var_value(sub)
+                return _let(sub, render_var_value)
             if any(c.startswith(local + "_") for c in df.columns):
-                from rsyslog_spark.functions.json_fns import tree_get
-                return render_var_value(
-                    tree_get(_local_tree_json(df), "$!" + lname[2:]))
+                return _let(_tree_read(_local_tree_json(df),
+                                       "$!" + lname[2:]),
+                            render_var_value)
             return F.lit(None).cast("string")
         return render_var_value(_container_to_json(df, local)
                                 if df is not None else F.col(local))
@@ -383,7 +388,8 @@ def _set_tree_json(df) -> Column | None:
     metadata the Set statement records (varname's '!'→'_' flattening
     is lossy); columns without it (mm*-operator fields) are
     single-level keys. NULL leaves drop out (to_json omits nulls), so
-    rows a gated set never touched render without the key."""
+    rows a gated set never touched render without the key; a row
+    with no set leaf at all renders NULL."""
     if df is None:
         return None
     root: dict = {}
@@ -417,7 +423,7 @@ def _set_tree_json(df) -> Column | None:
     if not root:
         return None
 
-    return F.coalesce(_concat_obj(root), F.lit("{}"))
+    return _concat_obj(root)
 
 
 def _leaf_json_text(leaf: Column, meta: dict) -> Column:
@@ -439,10 +445,11 @@ def _leaf_json_text(leaf: Column, meta: dict) -> Column:
         return F.when(s == "null", s) \
             .when(F.try_parse_json(s).isNotNull(), s)
     # typed scalar → its JSON token via the 1-element-array trick
-    # (to_json renders numbers/bools unquoted, strings escaped)
-    arr = F.to_json(F.array(leaf))
-    scalar = F.when(leaf.isNotNull(),
-                    F.substr(arr, F.lit(2), F.length(arr) - 2))
+    # (to_json renders numbers/bools unquoted, strings escaped); (?s)
+    # because Java's '.' does not match line terminators such as
+    # U+0085 and U+2028, which to_json leaves raw
+    scalar = F.when(leaf.isNotNull(), F.regexp_extract(
+        F.to_json(F.array(leaf)), r"(?s)^\[(.*)\]$", 1))
     if meta.get("rs_json_maybe"):
         istree = (F.substring(s, 1, 1).isin("{", "[")
                   & F.try_parse_json(s).isNotNull())
@@ -453,7 +460,16 @@ def _leaf_json_text(leaf: Column, meta: dict) -> Column:
 def _concat_obj(node: dict) -> Column:
     """{key: json-text-Column | nested dict} → the object's JSON
     text; NULL leaves drop out; all-NULL → NULL (caller decides
-    whether that renders '{}' or nothing)."""
+    whether that renders '{}' or nothing).
+
+    Single-reference rule: every leaf and every nested object is
+    referenced exactly ONCE in the result. A subexpression used
+    twice is copied twice into the plan, and the copies multiply
+    with each nesting level and each caller that reuses the tree
+    (the renderers in this module, rainerscript._var_col), so
+    concat (NULL when its value is) and concat_ws (skips NULL
+    pieces) replace the NULL tests, and nullif turns the empty
+    join into NULL (Catalyst evaluates its operand once)."""
     import json as _json
 
     pieces = []
@@ -468,13 +484,27 @@ def _concat_obj(node: dict) -> Column:
                 vj = F.coalesce(vj, selfcol)
         else:
             vj = v
-        pieces.append(
-            F.when(vj.isNotNull(),
-                   F.concat(F.lit(_json.dumps(k) + ":"), vj)))
-    arr = F.filter(F.array(*pieces), lambda x: x.isNotNull())
-    return F.when(F.size(arr) > 0,
-                  F.concat(F.lit("{"), F.array_join(arr, ","),
-                           F.lit("}")))
+        pieces.append(F.concat(F.lit(_json.dumps(k) + ":"), vj))
+    return F.concat(F.lit("{"),
+                    F.nullif(F.concat_ws(",", *pieces), F.lit("")),
+                    F.lit("}"))
+
+
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated and written into the
+    plan once: a one-element ``transform`` hands it to ``body`` as a
+    lambda variable. Catalyst has no user-facing let, and ``body``
+    would otherwise copy ``value`` once per reference."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _tree_read(tree: Column, path: str) -> Column:
+    """tree_get of ``path`` out of an assembled tree (``_all_json_col``,
+    ``_local_tree_json``) — tree_get reads its input twice, so the
+    tree is bound once."""
+    from rsyslog_spark.functions.json_fns import tree_get
+
+    return _let(tree, lambda t: tree_get(t, path))
 
 
 def _local_tree_json(df=None) -> Column:
@@ -505,8 +535,8 @@ def _local_tree_json(df=None) -> Column:
             node = nxt
         node[segs[-1]] = _leaf_json_text(qcol(fld.name), meta)
 
-    built = F.coalesce(_concat_obj(root), F.lit("{}")) if root \
-        else None
+    # built is NULL (never "{}") on a row with no leaf set
+    built = _concat_obj(root) if root else None
     root = (F.col("local__root").cast("string")
             if "local__root" in df.columns else None)
     if built is None and root is None:
@@ -514,10 +544,8 @@ def _local_tree_json(df=None) -> Column:
     if built is None:
         return root
     if root is None:
-        return F.when(built == "{}", F.lit(None)).otherwise(built)
-    merged = F.when(built == "{}", root).otherwise(built)
-    return F.when(F.coalesce(merged, F.lit("{}")) == "{}",
-                  F.lit(None)).otherwise(merged)
+        return built
+    return F.nullif(F.coalesce(built, root), F.lit("{}"))
 
 
 def _all_json_col(df=None, empty: str | None = "{}") -> Column:
@@ -535,23 +563,35 @@ def _all_json_col(df=None, empty: str | None = "{}") -> Column:
     tree = F.coalesce(raw, F.lit("{}"))
     empty_lit = (F.lit(empty) if empty is not None
                  else F.lit(None).cast("string"))
-    setj = _set_tree_json(df)
-    if setj is None:
+    setobj = _set_tree_json(df)
+    if setobj is None:
         return F.coalesce(raw, empty_lit)
-    setj = F.coalesce(setj, F.lit("{}"))
-    tkeys = F.coalesce(F.json_object_keys(tree), F.array())
-    skeys = F.coalesce(F.json_object_keys(setj), F.array())
-    dedup = F.to_json(F.map_concat(
-        F.map_filter(F.from_json(tree, "map<string,variant>"),
-                     lambda k, _v: ~F.array_contains(skeys, k)),
-        F.from_json(setj, "map<string,variant>")))
-    return (F.when((setj == "{}") & raw.isNull(), empty_lit)
-            .when(setj == "{}", tree)
-            .when(tree == "{}", setj)
-            .when(F.arrays_overlap(tkeys, skeys), dedup)
-            .otherwise(F.concat(
-                F.regexp_replace(tree, r"\}\s*$", ""), F.lit(","),
-                F.regexp_replace(setj, r"^\{", ""))))
+    if not has_json:
+        # no parsed tree: every merge arm below is dead
+        return F.coalesce(setobj, empty_lit)
+
+    def merge(setj):
+        tkeys = F.coalesce(F.json_object_keys(tree), F.array())
+        skeys = F.coalesce(F.json_object_keys(setj), F.array())
+        # the parsed keys minus the set keys, without a lambda that
+        # reads setj: a nested lambda capturing this one's variable
+        # keeps a Python UDF over the result from being extracted
+        # (unflatten($!) fails to plan)
+        tmap = F.from_json(tree, "map<string,variant>")
+        kept = F.array_except(F.map_keys(tmap), skeys)
+        dedup = F.to_json(F.map_concat(
+            F.map_from_arrays(
+                kept, F.transform(kept, lambda k: F.element_at(tmap, k))),
+            F.from_json(setj, "map<string,variant>")))
+        return (F.when((setj == "{}") & raw.isNull(), empty_lit)
+                .when(setj == "{}", tree)
+                .when(tree == "{}", setj)
+                .when(F.arrays_overlap(tkeys, skeys), dedup)
+                .otherwise(F.concat(
+                    F.regexp_replace(tree, r"\}\s*$", ""), F.lit(","),
+                    F.regexp_replace(setj, r"^\{", ""))))
+
+    return _let(F.coalesce(setobj, F.lit("{}")), merge)
 
 
 #: the key set and order of %jsonmesg% (ref: runtime/msg.c
@@ -594,7 +634,7 @@ def _jsonmesg_col(df=None) -> Column:
     # json-c SPACED render (msg.c jsonToString → glblJsonFormatOpt;
     # reference golden prop-jsonmesg-vg.sh greps '"msg": "...", ')
     from rsyslog_spark.functions.json_fns import jsonc_spaced
-    return jsonc_spaced(out)
+    return _let(out, jsonc_spaced)
 
 
 def _pri_text(which: str) -> Column:

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,6 +30,18 @@ NODES = ("Exchange", "BroadcastHashJoin", "SortMergeJoin",
          "CartesianProduct", "BatchEvalPython", "ArrowEvalPython",
          "MapInPandas", "MapInArrow", "Sort", "Window",
          "HashAggregate", "ObjectHashAggregate", "SortAggregate")
+
+#: a plan line's operator name: after the tree drawing ("+- ", ":  ")
+#: and an optional whole-stage-codegen marker ("*(3) ")
+_NODE_RE = re.compile(r"^[ \t:|+-]*(?:\*\(\d+\)\s*)?([A-Za-z]\w*)", re.M)
+
+
+def node_counts(plan: str) -> dict[str, int]:
+    """Count the NODES in a plan string by whole operator name, so
+    ObjectHashAggregate is not also a HashAggregate, BroadcastExchange
+    not an Exchange, SortMergeJoin not a Sort."""
+    names = Counter(_NODE_RE.findall(plan))
+    return {n: names[n] for n in NODES if names[n]}
 
 
 def main() -> int:
@@ -71,16 +85,8 @@ def main() -> int:
             best_c = min(best_c, t1 - t0)
             best_e = min(best_e, t2 - t1)
             if rep == 0:
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                plan_counts = {n: plan.count(n) for n in NODES
-                               if plan.count(n)}
-                # Sort counts SortMergeJoin/SortAggregate substrings too
-                if "Sort" in plan_counts:
-                    plan_counts["Sort"] -= (
-                        plan_counts.get("SortMergeJoin", 0)
-                        + plan_counts.get("SortAggregate", 0))
-                    if not plan_counts["Sort"]:
-                        del plan_counts["Sort"]
+                plan_counts = node_counts(
+                    df._jdf.queryExecution().executedPlan().toString())
         sc.setJobDescription(None)
         entry: dict = {"err": err} if err else {
             "construct_s": round(best_c, 3),
